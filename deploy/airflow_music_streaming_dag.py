@@ -35,7 +35,9 @@ with DAG(
 ) as dag:
     # One Spark job replaces the reference's extract/validate/transform/load
     # task chain; idempotent date-partitioned overwrite makes retries and
-    # backfills safe (no Redshift COPY append duplicates).
+    # backfills safe (no Redshift COPY append duplicates). Session settings
+    # (UTC, AQE, codegen cache) are the job's own defaults
+    # (graft.HarnessSession); any conf passed here overrides them.
     run_pipeline = SparkSubmitOperator(
         task_id="run_music_streaming_pipeline",
         application="graft-assembly.jar",
@@ -46,8 +48,4 @@ with DAG(
             "s3a://dims/songs.csv",
             "s3a://kpi-warehouse/",
         ],
-        conf={
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.adaptive.enabled": "true",
-        },
     )

@@ -1,51 +1,50 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.functions.{CosineSimilarityExpr, RollingHashExpr}
+import graft.functions.{CosineSimilarityExpr, GeoMeanUdaf, RollingHashExpr}
+import graft.plans.ExpandDeferredWith
 
-/** SQL-surface registration for graft's native expressions.
+/** The one install point for graft's SQL functions and optimizer rule,
+  * called by [[HarnessSession.build]] on every session it makes; no query
+  * constructor mutates its session. Idempotent, in the shape of Pathling's
+  * `SqlStrategy.setup`. It installs:
+  *  - `cosine_similarity(a, b)` and `rolling_hash(str, k, stride)`, the
+  *    codegen'd native expressions, in the temp-function registry — no
+  *    UDF, full whole-stage codegen from plain SQL text;
+  *  - `geomean(x)`, the typed [[GeoMeanUdaf]];
+  *  - [[ExpandDeferredWith]], appended once to
+  *    `experimental.extraOptimizations`. It must stay there, the
+  *    optimizer's LAST batch: `injectOptimizerRule` would put it in the
+  *    operator-optimization batch, whose pushdown re-inlines exactly the
+  *    defs the rule exists to keep apart.
   *
-  * Two entry points:
-  *  - `spark.sql.extensions=graft.GraftExtensions` at session build time
-  *    (the standard extensions hook — works for pure-SQL users);
-  *  - [[GraftExtensions.register]] on a live session (temp-function
-  *    registry), used by tests and notebook sessions.
-  *
-  * After either, `SELECT cosine_similarity(a.embedding, b.embedding)` runs
-  * the codegen'd expression — no UDF, full whole-stage codegen.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineDescriptor)
-    ext.injectFunction(GraftExtensions.rollingHashDescriptor)
-    // HOF vector patterns → fused codegen expressions (bitwise-preserving)
-    ext.injectOptimizerRule(_ => graft.plans.RewriteVectorOps)
-  }
-}
-
+  * A session made any other way (`spark.newSession()`) starts without
+  * them and must call [[install]] itself. */
 object GraftExtensions {
 
-  private def build(args: Seq[Expression]): Expression = {
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction(
+      "cosine_similarity", cosineSimilarity, "built-in")
+    registry.createOrReplaceTempFunction(
+      "rolling_hash", rollingHash, "built-in")
+    spark.udf.register("geomean",
+      org.apache.spark.sql.functions.udaf(GeoMeanUdaf))
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(ExpandDeferredWith))
+      spark.experimental.extraOptimizations = rules :+ ExpandDeferredWith
+  }
+
+  private def cosineSimilarity(args: Seq[Expression]): Expression = {
     require(args.length == 2,
       s"cosine_similarity expects 2 arguments, got ${args.length}")
     CosineSimilarityExpr(args(0), args(1))
   }
 
-  val cosineDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_similarity"),
-    new ExpressionInfo(classOf[CosineSimilarityExpr].getName,
-      "cosine_similarity"),
-    build,
-  )
-
-  private def buildRolling(args: Seq[Expression]): Expression = {
+  private def rollingHash(args: Seq[Expression]): Expression = {
     require(args.length == 3,
       s"rolling_hash expects (str, k, stride), got ${args.length} args")
     def intLit(e: Expression, name: String): Int = e match {
@@ -54,20 +53,5 @@ object GraftExtensions {
         s"rolling_hash: $name must be an integer literal, got $other")
     }
     RollingHashExpr(args.head, intLit(args(1), "k"), intLit(args(2), "stride"))
-  }
-
-  val rollingHashDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHashExpr].getName, "rolling_hash"),
-    buildRolling,
-  )
-
-  /** Register on an existing session (temp function registry). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", build, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", buildRolling, "built-in")
   }
 }

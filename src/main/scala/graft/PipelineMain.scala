@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry point for the reference pipeline — what an Airflow
   * task invokes (see deploy/airflow_music_streaming_dag.py). Exit codes
   * mirror the DAG's branch outcomes so the orchestrator can route:
@@ -12,11 +10,9 @@ object PipelineMain {
     require(args.length == 4,
       "usage: PipelineMain <streamsGlob> <usersCsv> <songsCsv> <outDir>")
     val Array(streamsGlob, usersCsv, songsCsv, outDir) = args
-    val spark = SparkSession.builder()
-      .appName("graft-music-streaming-etl")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    // spark-submit's --master and --conf win over every recipe default
+    val spark = HarnessSession.build(
+      Runtime.getRuntime.availableProcessors.toString)
     val code = Pipeline.run(spark, streamsGlob, usersCsv, songsCsv, outDir) match {
       case Pipeline.NoStreams =>
         System.err.println("[pipeline] no stream batches found; stopping")

@@ -198,9 +198,8 @@ object Pca {
 
   /** Project onto the top-k components: p_c = ⟨v, W_c⟩ − ⟨mean, W_c⟩.
     * The mean term is a precomputed scalar, so projection is k codegen'd
-    * dot products over the scan — a narrow map, no shuffle, and the
-    * RewriteVectorOps rule turns each dot into the fused native
-    * expression. */
+    * dot products over the scan — a narrow map, no shuffle, each dot the
+    * fused native expression. */
   def project(emb: DataFrame, model: Model, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding")
       : DataFrame = {

@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions
 
 /** Typed UDAF (SURVEY §2.10): geometric mean as an [[Aggregator]],
-  * registered into the SQL function registry so analysts call it as
-  * `geomean(x)` in plain SQL.
+  * registered into the SQL function registry by
+  * [[graft.GraftExtensions.install]] so analysts call it as `geomean(x)`
+  * in plain SQL.
   *
   * The buffer is (Σ ln x, n) — mergeable, so Spark computes map-side
   * partials and combines per-partition buffers: the aggregate moves two
@@ -31,8 +31,4 @@ object GeoMeanUdaf extends Aggregator[Double, (Double, Long), Double] {
     Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong)
 
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-
-  /** Idempotent SQL registration. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("geomean", functions.udaf(GeoMeanUdaf))
 }

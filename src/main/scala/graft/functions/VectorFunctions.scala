@@ -20,21 +20,16 @@ object VectorFunctions {
 
   /** Dot product Σ aᵢ·bᵢ in double precision — HOF formulation
     * (interpreted lambda per element; the semantic reference for the
-    * codegen'd path, and the exact pattern
-    * [[graft.plans.RewriteVectorOps]] rewrites). */
+    * codegen'd path). */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(asD(a), asD(b), (x, y) => x * y),
       lit(0.0d), (acc, x) => acc + x)
 
   /** Dot product via the codegen'd [[DotProductExpr]] — bitwise-equal to
     * [[dotHof]] (identical left-to-right double accumulation, identical
-    * null outcomes; pinned by RewriteVectorOpsSpec/VectorFunctionsSpec)
-    * and fused into whole-stage codegen instead of walking an
-    * interpreted lambda per element. Built directly rather than relying
-    * on the RewriteVectorOps optimizer rule: the rule only fires in
-    * sessions that install it, and the bench/verify sessions do not —
-    * sign-LSH's 32 per-row plane dots were running interpreted in every
-    * graded run. */
+    * null outcomes; pinned by VectorFunctionsSpec) and fused into
+    * whole-stage codegen instead of walking an interpreted lambda per
+    * element. */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftShims
     GraftShims.column(DotProductExpr(

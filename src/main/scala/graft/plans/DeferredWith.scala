@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.DataType
   * [[DeferredWith]] is structurally the same node under a class the early
   * batch does not match, so it rides through analysis and every
   * inlining/pushdown rule as one opaque (deterministic) scalar.
-  * [[ExpandDeferredWith]] — installed via
-  * `spark.experimental.extraOptimizations`, which SparkOptimizer runs as
-  * its LAST batch — converts it to a real `With` and expands it there,
+  * [[ExpandDeferredWith]] — installed by `graft.GraftExtensions.install`
+  * into `spark.experimental.extraOptimizations`, which SparkOptimizer runs
+  * as its LAST batch — converts it to a real `With` and expands it there,
   * after which no pushdown rule runs again (AQE's re-optimizer has its
   * own small batch list that never re-inlines project aliases). The
   * expansion is Spark's own rule, so evaluation semantics are exactly
@@ -36,9 +36,10 @@ import org.apache.spark.sql.types.DataType
   * column's expression and catalyst nodes with explicit casts, because a
   * `CommonExpressionRef` snapshots its def's root dataType eagerly.
   * Queries build this only through [[DeferredWith.apply]], which wires
-  * fresh def ids; every consumer must install [[ExpandDeferredWith]] on
-  * its session first (the node is Unevaluable by design — forgetting the
-  * rule fails loudly at physical planning, never silently).
+  * fresh def ids; the session must carry [[ExpandDeferredWith]] (every
+  * `graft.HarnessSession` does). The node is Unevaluable by design — a
+  * session without the rule fails loudly at physical planning, never
+  * silently.
   */
 case class DeferredWith(child: Expression, defs: Seq[CommonExpressionDef])
     extends Expression with Unevaluable {
@@ -101,11 +102,4 @@ object ExpandDeferredWith extends Rule[LogicalPlan] {
       RemoveNoopOperators(ColumnPruning(cur))
     }
   }
-
-  /** Install on `spark` (idempotent) — call from every query constructor
-    * that builds a [[DeferredWith]]. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_ eq this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 }

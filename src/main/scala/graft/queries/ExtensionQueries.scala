@@ -606,12 +606,11 @@ object ExtensionQueries extends QueryGroup {
   }
 
   /** The SQL-function surface end-to-end: `cosine_similarity` is the
-    * codegen'd native expression registered by GraftExtensions (temp-
-    * registry path here; the spark.sql.extensions hook is spec-covered),
-    * invoked from SQL text exactly as a pure-SQL user would — no Column
-    * API in the query. Consecutive-vector pairs, 4 dp contract. */
+    * codegen'd native expression the session recipe registers
+    * (GraftExtensions.install), invoked from SQL text exactly as a
+    * pure-SQL user would — no Column API in the query. Consecutive-vector
+    * pairs, 4 dp contract. */
   private def sqlCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(s)
     emb(s, dir).selectExpr("vec_id", "cast(embedding as array<double>) AS v")
       .createOrReplaceTempView("graft_emb_sql")
     s.sql("""SELECT a.vec_id AS id_a, b.vec_id AS id_b,

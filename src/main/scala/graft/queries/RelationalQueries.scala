@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.MergeInto
-import graft.functions.GeoMeanUdaf
 import graft.io.Sources
 
 /** Deep relational surface: the multiway star join, CDC merge-apply,
@@ -197,12 +196,12 @@ object RelationalQueries extends QueryGroup {
       |ORDER BY c_custkey""".stripMargin
 
   /** Geometric mean per event type via the SQL-registered typed UDAF
-    * ([[GeoMeanUdaf]]) — the query text is plain SQL, proving the
-    * §2.10 extension surface reaches analysts, not just Scala callers.
+    * ([[graft.functions.GeoMeanUdaf]]) — the query text is plain SQL,
+    * proving the §2.10 extension surface reaches analysts, not just Scala
+    * callers.
     * Rounded to 6 dp on both engines (ln/exp are the one place the
     * repo's exact-arithmetic rules can't apply). */
   private def udafGeomean(s: SparkSession, dir: String): DataFrame = {
-    GeoMeanUdaf.register(s)
     Sources.table(s, dir, "events").createOrReplaceTempView("events_gm")
     // value > 0 on BOTH sides: the geometric mean is undefined at 0 and
     // DuckDB's ln(0) raises (seen at sf0.1); the UDAF's skip-nonpositive

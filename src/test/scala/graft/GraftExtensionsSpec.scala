@@ -1,10 +1,11 @@
 package graft
 
+import graft.plans.ExpandDeferredWith
+
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine_similarity is callable from SQL after registration") {
-    GraftExtensions.register(spark)
     Seq((Array(1.0f, 0.0f), Array(0.5f, 0.0f)))
       .toDF("a", "b").createOrReplaceTempView("vecs")
     val r = spark.sql(
@@ -13,7 +14,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("rolling_hash is callable from SQL with literal window args") {
-    GraftExtensions.register(spark)
     Seq("abcdefghij").toDF("t").createOrReplaceTempView("rh")
     val arr = spark.sql("SELECT rolling_hash(t, 4, 2) AS h FROM rh")
       .head().getSeq[Long](0)
@@ -24,8 +24,15 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("extensions hook applies cleanly to a SparkSessionExtensions") {
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(e) // injectFunction must accept the descriptor
+  test("constructing queries leaves the recipe session unchanged") {
+    // the three queries that used to install their own functions / rule
+    val rules = spark.experimental.extraOptimizations
+    val functions = spark.sessionState.functionRegistry.listFunction().toSet
+    assert(rules.count(_ eq ExpandDeferredWith) == 1)
+    for (name <- Seq("pipeline_pretrain", "f_sql_cosine", "a_udaf_geomean"))
+      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+    assert(spark.experimental.extraOptimizations == rules)
+    assert(spark.sessionState.functionRegistry.listFunction().toSet ==
+      functions)
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{GraftExtensions, SparkSpec}
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * pushdown — the final plan carries `_common_expr` def-Projects and the
   * Filter condition references them instead of duplicated subtrees, (3)
   * nested defs expand fully (no With survives to physical planning),
-  * (4) install() is idempotent, (5) an uninstalled session fails LOUDLY
+  * (4) GraftExtensions.install is idempotent, (5) a session without it
+  * fails LOUDLY
   * rather than silently executing something else. */
 class DeferredWithSpec extends SparkSpec {
 
@@ -22,7 +23,7 @@ class DeferredWithSpec extends SparkSpec {
 
   private lazy val withRule = {
     val s = spark.newSession()
-    ExpandDeferredWith.install(s)
+    GraftExtensions.install(s)
     s
   }
 
@@ -74,10 +75,14 @@ class DeferredWithSpec extends SparkSpec {
   }
 
   test("install is idempotent") {
-    val n0 = withRule.experimental.extraOptimizations.length
-    ExpandDeferredWith.install(withRule)
-    ExpandDeferredWith.install(withRule)
-    assert(withRule.experimental.extraOptimizations.length == n0)
+    val functions =
+      withRule.sessionState.functionRegistry.listFunction().toSet
+    GraftExtensions.install(withRule)
+    GraftExtensions.install(withRule)
+    assert(withRule.experimental.extraOptimizations ==
+      Seq(ExpandDeferredWith))
+    assert(withRule.sessionState.functionRegistry.listFunction().toSet ==
+      functions)
   }
 
   test("uninstalled session fails loudly, not silently") {
@@ -91,6 +96,7 @@ class DeferredWithSpec extends SparkSpec {
 
   test("pipeline_pretrain itself carries the collapsed gate") {
     val s = spark.newSession()
+    GraftExtensions.install(s)
     val out = graft.ext.Pretrain.curate(docs(s))
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("_common_expr"))
